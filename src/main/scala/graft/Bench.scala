@@ -1,23 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.runtime.GraftSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional args(0): comma-separated query names — time just those
     // (same warmup + timing protocol), so a query added after a full
-    // campaign can be measured alone without re-running the suite.
-    val only: Option[Set[String]] =
-      args.headOption.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // Fail fast on names that match nothing — a typo (or passing the SF
-    // dir as args(0): it comes from SPARK_GRAFT_SF_DIR) would otherwise
-    // emit a zero-query JSON line that looks like a clean measurement.
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
-          "(args(0) is ONLY a comma-separated query filter; the data dir " +
-          "comes from SPARK_GRAFT_SF_DIR)")
-    }
+    // campaign can be measured alone without re-running the suite. The
+    // data dir is NOT an argument: it comes from SPARK_GRAFT_SF_DIR.
+    val only = SparkEntry.queryFilter(args.headOption)
     // Headline suite = all queries minus the oracle-pinned negative
     // controls (SparkEntry.negativeControls — configurations the code's
     // own scaladoc steers users away from; x_ann_ivf_hier alone would
@@ -26,8 +17,6 @@ object Bench {
     val picked = SparkEntry.queries.filter { case (n, _) =>
       only.map(_(n)).getOrElse(!SparkEntry.negativeControls(n))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Timed runs per query (per-query MIN is reported): this box is a
     // microVM with 20-50% host-neighbour drift between runs, and min-of-N
     // independent passes is the de-noising every published campaign and
@@ -36,25 +25,8 @@ object Bench {
     // (round-10 verdict task 6). The raw per-run times are emitted too.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite (guide §3.1): when every
-      // post-shuffle partition's build side fits under the threshold, the
-      // join skips both sorts. 256 MB is a per-partition bound, so the
-      // setting is scale-adaptive by construction (bigger data -> more
-      // partitions, bound unchanged), not a local[32] constant; the same
-      // value is the production recommendation for 4-8 GB executors.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Steady-state measurement: warm codegen/IO paths once, untimed.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -98,32 +70,44 @@ object Bench {
     // Steady-state: `runs` timed passes per query, per-query MIN reported
     // (the noise-floor estimator for a drift-dominated box); fixed name
     // order keeps runs comparable across rounds.
+    // A run that throws is never timed: the query stops there, is marked
+    // "failed" in `status`, stays out of `queries` and the total, and the
+    // main exits 1 once the line is written.
     val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
       val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val frames = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.DataFrame]
-      val times = (1 to runs).map { _ =>
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var failed = false
+      while (times.size < runs && !failed) {
         val t0 = System.nanoTime()
         try {
           val df = fn(spark, sfDir)
           frames += df
           force(df)
-        } catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed = true
+        }
       }
       releaseQueryState(frames.toSeq, pinnedBefore)
-      (name, times.min, times)
+      (name, times.toSeq, failed)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val timed = results.collect { case (k, ts, false) => (k, ts.min) }
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val raw = results.map { case (k, _, ts) =>
+    val raw = results.map { case (k, ts, _) =>
       s"\"" + k + "\":" + ts.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val status = results.map { case (k, _, failed) =>
+      s"\"" + k + "\":\"" + (if (failed) "failed" else "ok") + "\""
     }.mkString("{", ",", "}")
     val excluded = SparkEntry.negativeControls
       .filter(n => !picked.contains(n) && SparkEntry.queries.contains(n))
       .toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"protocol":"min-of-$runs","runs":$raw,"negative_controls_excluded":$excluded,"sf":"$sfDir"}"""
+    val total = timed.map(_._2).sum
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"protocol":"min-of-$runs","runs":$raw,"status":$status,"negative_controls_excluded":$excluded,"sf":"$sfDir"}"""
     println(line)
     // Stdout alone is lossy — the round-13 driver captured only a
     // truncated tail, leaving BENCH_r13.json with `parsed: null`. Persist
@@ -133,5 +117,6 @@ object Bench {
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"bench-out write failed: $e") }
     spark.stop()
+    if (results.exists(_._3)) sys.exit(1)
   }
 }

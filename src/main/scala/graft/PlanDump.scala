@@ -1,46 +1,31 @@
 package graft
 
+import graft.runtime.GraftSession
+import scala.util.control.NonFatal
+
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (plans/<round>/<q>_<tag>.txt).
-  * Runs under the SAME session configuration as [[Bench]] (master,
-  * shuffle partitions, AQE, broadcast threshold), so the dumped plan is
-  * the plan the bench actually executes — a plan captured under a
-  * different planner would pin claims Bench never runs.
+  * Runs on the same [[graft.runtime.GraftSession]] as [[Bench]], so the
+  * dumped plan is the plan the bench actually executes — a plan captured
+  * under a different planner would pin claims Bench never runs.
   *
   * Usage: PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
-  * (no query list = every non-negative-control query). */
+  * (no query list = every non-negative-control query). Exits 1 if any
+  * query fails to plan. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val only: Option[Set[String]] =
-      args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val only = SparkEntry.queryFilter(args.lift(3))
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val picked = SparkEntry.queries
       .filter { case (n, _) => only.map(_(n)).getOrElse(!SparkEntry.negativeControls(n)) }
       .toSeq.sortBy(_._1)
-    picked.foreach { case (name, fn) =>
+    val failed = picked.flatMap { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -48,10 +33,13 @@ object PlanDump {
           java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[plandump] $name ok")
-      } catch { case e: Throwable =>
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

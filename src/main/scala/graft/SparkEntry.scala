@@ -45,4 +45,16 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = graft.queries.QueryPack.oracles
+  /** The mains' optional query filter: a comma-separated list of `queries`
+    * names. Names that match nothing fail fast — a typo would otherwise
+    * run zero queries and look like a clean pass. */
+  def queryFilter(arg: Option[String]): Option[Set[String]] =
+    arg.map { s =>
+      val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.keySet)
+      require(unknown.isEmpty,
+        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
+          "(the filter is a comma-separated list of query names)")
+      names
+    }
 }

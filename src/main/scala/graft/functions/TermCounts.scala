@@ -18,8 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reaches the first shuffle is one pre-aggregated row per distinct
   * (doc, term) instead of one row per token occurrence.
   *
-  * Measured at sf10 (500k docs, ~114M tokens, `graft.Probe`): the
-  * (term, doc) hash-shuffle is ~2.9 s of `termStats`'s ~3.0 s — the
+  * Measured at sf10 (500k docs, ~114M tokens; phase profile in
+  * SCALING.md's retrieval section, resulting curve in
+  * `BENCH_retr_r11_sf10.json`): the (term, doc) hash-shuffle is ~2.9 s
+  * of `termStats`'s ~3.0 s — the
   * split/explode itself is 0.5 s — so eliminating that exchange is the
   * whole optimisation. The map is built by a compiled static helper
   * invoked FROM generated code (the same stage-fusion contract as

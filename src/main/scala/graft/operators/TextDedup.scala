@@ -69,7 +69,12 @@ object TextDedup {
     * materialised once (building the pairs frame therefore runs one eager
     * job). `checkpointDir` picks the policy ([[graft.runtime.Checkpoints]]):
     * executor-local by default; pass a reliable directory on a real
-    * cluster so downstream queries survive executor loss. */
+    * cluster so downstream queries survive executor loss.
+    *
+    * Output: (`idCol`_a, `idCol`_b), idA < idB. Precondition: `idCol` is
+    * unique in `docs` — as in [[bandedHammingPairs]], the witness filter
+    * makes the output pair-distinct only over unique ids; a repeated id
+    * yields repeated pair rows. Nothing checks this. */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 6, shingle: Int = 3,
                         bandSize: Int = 2, numBands: Int = 2,
@@ -101,13 +106,14 @@ object TextDedup {
     // rebuilt lazily from the pinned longs by each join side (struct
     // packing + posexplode, pure arithmetic). The r19 first cut
     // checkpointed the EXPLODED frame with `_keys` riding it instead,
-    // and building that checkpoint took 78 s at sf10 (R19Probe, vs 3.0 s
-    // for this shape): `_keys` appears both as a generator input and an
-    // output column, and the optimizer resolves that by duplicating the
-    // whole minhash chain (md5 per shingle × 6 affine array_mins) into
-    // every reference. Pinning the flat signatures once makes every
-    // downstream reference a cheap column read — the same structure
-    // [[bandedHammingPairs]] always had (its ckpt pins (id, _sig)).
+    // and building that checkpoint took 78 s at sf10 (vs 3.0 s for this
+    // shape; raw: BENCH_r19probe_minhash_sf10.json): `_keys` appears both
+    // as a generator input and an output column, and the optimizer
+    // resolves that by duplicating the whole minhash chain (md5 per
+    // shingle × 6 affine array_mins) into every reference. Pinning the
+    // flat signatures once makes every downstream reference a cheap
+    // column read — the same structure [[bandedHammingPairs]] always had
+    // (its ckpt pins (id, _sig)).
     // (A cache() here would register a new cache entry per invocation
     // and never unpersist; fully lazy recompute measured 2× slower.)
     val ckpt = graft.runtime.Checkpoints.policy(docs.sparkSession, checkpointDir)
@@ -242,7 +248,12 @@ object TextDedup {
     * re-run its lineage — for [[simhashPairs]] that lineage is the corpus
     * word explode + per-doc aggregation, the most expensive phase).
     *
-    * Output: (`idCol`_a, `idCol`_b, hamming), idA < idB, distinct. */
+    * Output: (`idCol`_a, `idCol`_b, hamming), idA < idB.
+    *
+    * Precondition: `idCol` is unique in `sig`. The first-matching-band
+    * witness filter emits exactly one row per pair of input ROWS, so the
+    * output is pair-distinct only when no id repeats; a repeated id yields
+    * repeated pair rows. Nothing checks this. */
   def bandedHammingPairs(sig: DataFrame, idCol: String, sigColName: String,
                          bits: Int, bands: Int = 4, maxHamming: Int = 3,
                          checkpointDir: Option[String] = None): DataFrame = {
@@ -653,6 +664,8 @@ object TextDedup {
     val smjWas = spark.conf.get(smjKey, "true")
     val partWas = spark.conf.get(partKey)
     val edgeRows = edges.count()
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
     val loopAqeOff = aqeWas == "true" && edgeRows <= 50L * 1000 * 1000
     if (loopAqeOff) {
       spark.conf.set(aqeKey, "false")
@@ -692,20 +705,21 @@ object TextDedup {
         // The round's ONE heavy action is the checkpoint materialisation;
         // the convergence probe then reads the pinned blocks (a bounded
         // limit-1 scan of already-computed rows, never a recompute).
-        val t0 = System.nanoTime()
+        // Both run under a per-round job description, so any
+        // SparkListener sees one named group of jobs per round.
+        iter += 1
+        sc.setJobDescription(s"connectedComponents round $iter")
         val ckpted = labelCkpt(flagged)
-        val t1 = System.nanoTime()
         converged = ckpted.filter(col("_changed")).isEmpty
         labels = ckpted.select("id", "component")
-        iter += 1
-        if (sys.env.contains("SPARK_GRAFT_CC_TRACE")) System.err.println(
-          f"[cc] round $iter: materialise ${(t1 - t0) / 1e9}%.3f s, " +
-            f"probe ${(System.nanoTime() - t1) / 1e9}%.3f s")
       }
-    } finally if (loopAqeOff) {
-      spark.conf.set(aqeKey, aqeWas)
-      spark.conf.set(smjKey, smjWas)
-      spark.conf.set(partKey, partWas)
+    } finally {
+      sc.setJobDescription(callerDescription)
+      if (loopAqeOff) {
+        spark.conf.set(aqeKey, aqeWas)
+        spark.conf.set(smjKey, smjWas)
+        spark.conf.set(partKey, partWas)
+      }
     }
     // silent wrong answers are worse than failing: an unconverged result
     // would split one real cluster into several with no signal

@@ -281,9 +281,10 @@ object TextPipeline {
     * the same `addReferenceObj` channel, O(1) per symbol whatever the
     * vocabulary size. NOT the plan-literal `map()`+`element_at`
     * rendering this stage first shipped: a map literal is
-    * `ArrayBasedMapData`, every probe scans its key array, and TokProbe
-    * measured that O(V) cost at the production point (26.6 s vs 0.91 s
-    * at V = 32k — invisible at the oracle's toy vocab). Nor
+    * `ArrayBasedMapData`, every probe scans its key array, and the r15
+    * tokenizer probe measured that O(V) cost at the production point
+    * (26.6 s vs 0.91 s at V = 32k, `BENCH_tokprobe_r15_sf1.json` and
+    * SCALING.md's r15 ladder — invisible at the oracle's toy vocab). Nor
     * [[TextStats.bpeEncode]]'s broadcast join: the output here is a
     * per-DOC fingerprint, so a join would force an explode plus a
     * per-doc reassembly exchange that the exploded-row encoders never

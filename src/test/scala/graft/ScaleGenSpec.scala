@@ -12,11 +12,7 @@ class ScaleGenSpec extends SparkSpec {
     val src = "/root/testdata/sf0.001"
     val dst = java.nio.file.Files.createTempDirectory("sgspec").toString
     ScaleGen.scale(spark, src, dst, 2)
-    // legacy-compat: lets this spec's own reads handle a nanos-era
-    // events.parquet too (no effect on the current micros-NTZ testdata)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try assertScaled(src, dst)
-    finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assertScaled(src, dst)
   }
 
   private def assertScaled(src: String, dst: String): Unit = {

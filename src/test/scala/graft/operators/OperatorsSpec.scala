@@ -133,6 +133,32 @@ class OperatorsSpec extends SparkSpec {
     assert(got.values.forall(_ == 0L), "every node must label to the min id 0")
   }
 
+  test("connected components: each round's jobs are named; the caller's description survives") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val chain = (0 until 15).map(i => (i.toLong, i.toLong + 1)).toDF("a", "b")
+    sc.setJobDescription("caller")
+    sc.addSparkListener(listener)
+    try {
+      TextDedup.connectedComponents(chain, "a", "b")
+      org.apache.spark.GraftListenerBridge.drain(sc)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+    import scala.jdk.CollectionConverters._
+    val descriptions = seen.asScala.toSet
+    assert(Set("connectedComponents round 1", "connectedComponents round 2")
+      .subsetOf(descriptions), s"job descriptions seen: $descriptions")
+  }
+
   test("connected components: reliable checkpoint path writes to the dir") {
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toFile
     try {

@@ -629,8 +629,8 @@ class PlanQualitySpec extends SparkSpec {
     //  - the vocabulary lookup is the native hash-probe VocabId inside
     //    the projection (addReferenceObj table — O(1) per symbol at any
     //    V; the plan-literal map()+element_at it replaced scans its key
-    //    array O(V) per probe, TokProbe r15), never a corpus join; the
-    //    native BpeSegment runs in the same projection
+    //    array O(V) per probe, BENCH_tokprobe_r15_sf1.json), never a
+    //    corpus join; the native BpeSegment runs in the same projection
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike

@@ -1,11 +1,10 @@
 package graft.xml
 
 import graft.model._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Ported from the reference's `test/xml/table_test.rb` — golden expected
   * records pin augmentation, masking and xpath-evaluation semantics. */
-class XmlTableSpec extends AnyFunSuite {
+class XmlTableSpec extends graft.SparkSpec {
 
   private def cm(column: String, klass: String = null, rawtext: String = null,
                  rel: String = null, attr: String = null, multiple: Boolean = false,
@@ -241,7 +240,6 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("streaming records variant matches the batch split (bounded memory)") {
-    val spark = graft.runtime.GraftSession.local
     val dir = java.nio.file.Files.createTempDirectory("xmlstream")
     val xml = "<root>" + (1 to 50).map(i =>
       s"<record><id>$i</id><v a='x$i'>payload $i</v></record>").mkString + "</root>"
@@ -256,7 +254,6 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("streaming records decode UTF-16 (BOM) and Windows-1252 like the batch probe") {
-    val spark = graft.runtime.GraftSession.local
     val dir = java.nio.file.Files.createTempDirectory("xmlenc")
     val mapping = graft.model.TableMapping(xmlRecordXpath = Some("record"))
     val xml = "<root><record><v>café über</v></record></root>"
@@ -277,7 +274,6 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("X5 groupedRecords batches one row per source record (table.rb:41-53)") {
-    val spark = graft.runtime.GraftSession.local
     import spark.implicits._
     val mapping = TableMapping(columns = repeatingMapping)
     val xml =
